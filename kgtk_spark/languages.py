@@ -19,9 +19,6 @@ Debian ``iso-codes`` dataset — the same source pycountry ships):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from kgtk_spark.iso639_data import ISO_639_1, ISO_639_3_ALL
 
 # kgtk/value/languagevalidator.py DEFAULT_ADDITIONAL_LANGUAGE_CODES
@@ -29,10 +26,6 @@ DEFAULT_ADDITIONAL_LANGUAGE_CODES = ["cnr", "hyw", "szy", "bh", "mo", "eml"]
 
 _ISO_639_1_SET = frozenset(ISO_639_1)
 _ISO_639_3_SET = frozenset(ISO_639_3_ALL)
-
-KNOWN_LANGUAGE_CODES = frozenset(
-    [*ISO_639_1, *ISO_639_3_ALL, *DEFAULT_ADDITIONAL_LANGUAGE_CODES]
-)
 
 
 def validate_lang(
@@ -51,8 +44,3 @@ def validate_lang(
         return lang in additional_language_codes
     return lang in DEFAULT_ADDITIONAL_LANGUAGE_CODES
 
-
-def lang_is_valid_col(c: Column) -> Column:
-    """JVM predicate: the (suffix-stripped, lowercased) code is known."""
-    base = F.lower(F.element_at(F.split(c, "-"), 1))
-    return base.isin(sorted(KNOWN_LANGUAGE_CODES))

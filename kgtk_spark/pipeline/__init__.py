@@ -3,8 +3,11 @@
 Input contract (BASELINE.json input_hint): a table of
 ``(url: string, warc_ts: timestamp, html: binary, text: string, lang: string)``.
 
-Stages (each a DataFrame → DataFrame function; the runner materializes
-each to parquet with a manifest row for resume-from-checkpoint):
+Stages (each a DataFrame → DataFrame function). ``run_pipeline`` is the
+one definition that wires them: with ``out_dir`` every stage output is
+stored (parquet or catalog table) with a manifest row for
+resume-from-checkpoint; without it the run stays in memory, caching
+only the outputs that two or more later steps read:
 
 1. extract_text    — html → text when text is null; byte-identical per url
 2. detect_mentions — batched Aho-Corasick over text (broadcast alias dict)

@@ -1,16 +1,30 @@
-"""Resumable pipeline runner with a per-stage manifest.
+"""One definition of the six-stage web-page → KGTK-edge pipeline.
 
-Each stage materializes to parquet under ``out_dir/<stage>/`` and
-appends a manifest row (stage, fingerprint, row count, partitions,
-duration, status) to ``out_dir/_manifest/``. A rerun skips any stage
-whose manifest row is committed with a matching fingerprint and whose
-output directory still exists — resume-from-last-committed-snapshot
-(north_rule). On a cluster with an Iceberg catalog the same writes go
-through ``writeTo(...)`` table commits; parquet-directory-plus-manifest
-is the catalog-free equivalent (the parquet job commit protocol makes
-the directory write atomic; the manifest row is written only after).
+``run_pipeline`` calls each stage function of
+``kgtk_spark.pipeline.stages`` once and passes its output through a
+boundary. Whether ``out_dir`` is given decides the boundary:
 
-Fingerprints chain: stage_fp = sha256(stage, config, upstream_fp), so
+- **sink** (``out_dir`` set): each stage materializes under
+  ``out_dir/<stage>/`` (or as the catalog table ``<namespace>.<stage>``)
+  and appends a manifest row (stage, fingerprint, row count, partitions,
+  duration, status) to ``out_dir/_manifest/``. A rerun skips any stage
+  whose manifest row is committed with a matching fingerprint and whose
+  output still exists — resume-from-last-committed-snapshot
+  (north_rule). On a cluster with an Iceberg catalog the same writes go
+  through ``writeTo(...)`` table commits; parquet-directory-plus-manifest
+  is the catalog-free equivalent (the parquet job commit protocol makes
+  the directory write atomic; the manifest row is written only after).
+- **in memory** (no ``out_dir``): nothing is written; the graph fixes
+  each boundary by the number of stages that read its output. ``text``
+  (read by mention detection and triple extraction) is persisted and
+  released after its last reader; ``linked`` (read by none, but a
+  pipeline deliverable) is counted so a run includes its cost; every
+  other stage stays lazy.
+
+In both modes the raw triples are deduplicated on (node1, label, node2)
+before ``canonicalize``, and that distinct set is local-checkpointed.
+
+Fingerprints chain: stage_fp = sha256(stage, upstream_fp, config), so
 changing an upstream stage or a config invalidates everything below it.
 """
 
@@ -24,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgtk_spark.pipeline import stages as S
+from kgtk_spark.sources.iceberg import iceberg_available, read_table, table_exists, write_table
 
 MANIFEST_SCHEMA = (
     "stage string, fingerprint string, rows long, partitions int, "
@@ -71,78 +86,90 @@ class StageManifest:
         return self.spark.read.parquet(self.path + "_lineage")
 
 
-def _run_stage(
-    spark: SparkSession,
-    manifest: StageManifest,
-    committed: dict[str, str],
-    out_dir: str,
-    name: str,
-    fingerprint: str,
-    compute,
-    resume: bool,
-    table_namespace: str | None = None,
-    catalog: str = "iceberg",
-) -> DataFrame:
-    """Run-or-resume one stage; returns the stage output DataFrame.
+class _Sink:
+    """Sink boundaries: run-or-resume one stage, record manifest and lineage.
+    Stage outputs are parquet directories, or catalog tables when
+    ``table_namespace`` is set (resume then checks ``tableExists``)."""
 
-    With ``table_namespace`` set, stage outputs are CATALOG TABLES
-    (``<namespace>.<stage>``): Iceberg ``writeTo`` commits when the
-    named catalog is configured, session-catalog tables otherwise —
-    resume checks ``tableExists`` instead of the directory.
-    """
-    from kgtk_spark.sources.iceberg import (
-        iceberg_available,
-        read_table,
-        table_exists,
-        write_table,
-    )
+    def __init__(self, spark, out_dir, resume, input_fingerprint, table_namespace, catalog):
+        self.spark, self.out_dir = spark, out_dir
+        self.manifest = StageManifest(spark, out_dir)
+        self.committed = self.manifest.committed() if resume else {}
+        self.fp = input_fingerprint
+        self.namespace, self.catalog = table_namespace, catalog
+        self.session = bool(table_namespace) and not iceberg_available(spark, catalog)
 
-    path = os.path.join(out_dir, name)
-    if table_namespace:
-        ident = f"{table_namespace}.{name}"
-        use_session = not iceberg_available(spark, catalog)
-        if resume and committed.get(name) == fingerprint and table_exists(
-            spark, ident, catalog
-        ):
-            return read_table(spark, ident, path, catalog, session_catalog=use_session)
+    def _write(self, df: DataFrame, name: str) -> None:
+        path = os.path.join(self.out_dir, name)
+        if self.namespace:
+            write_table(
+                df, f"{self.namespace}.{name}", path, self.catalog, session_catalog=self.session
+            )
+        else:
+            df.write.mode("overwrite").parquet(path)
+
+    def _read(self, name: str) -> DataFrame | None:
+        """The stored output of ``name``, or None when it is gone."""
+        path = os.path.join(self.out_dir, name)
+        if self.namespace:
+            ident = f"{self.namespace}.{name}"
+            if not table_exists(self.spark, ident, self.catalog):
+                return None
+            return read_table(self.spark, ident, path, self.catalog, session_catalog=self.session)
+        return self.spark.read.parquet(path) if os.path.exists(path) else None
+
+    def __call__(self, name, step, compute, consumers=1, config=()) -> DataFrame:
+        self.fp = fp = _fp(step, self.fp, *config)
+        if self.committed.get(name) == fp and (out := self._read(name)) is not None:
+            return out
         t0 = time.time()
-        df = compute()
-        write_table(df, ident, path, catalog, session_catalog=use_session)
-        out = read_table(spark, ident, path, catalog, session_catalog=use_session)
-    else:
-        if resume and committed.get(name) == fingerprint and os.path.exists(path):
-            return spark.read.parquet(path)
-        t0 = time.time()
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-    # Per-partition lineage: one (file, rows) pair per written parquet
-    # part — the collect is bounded by the partition count, and the
-    # same aggregation also yields the total row count (no extra scan).
-    per_file = [
-        (r["file"], r["rows"])
-        for r in out.groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    ]
-    n = sum(rows for _, rows in per_file)
-    manifest.record(name, fingerprint, n, len(per_file), time.time() - t0)
-    manifest.record_lineage(name, fingerprint, per_file)
-    return out
+        self._write(compute(), name)
+        out = self._read(name)
+        # Per-partition lineage: one (file, rows) pair per written parquet
+        # part — the collect is bounded by the partition count, and the
+        # same aggregation also yields the total row count (no extra scan).
+        per_file = [
+            (r["file"], r["rows"])
+            for r in out.groupBy(F.input_file_name().alias("file"))
+            .agg(F.count(F.lit(1)).alias("rows"))
+            .collect()
+        ]
+        n = sum(rows for _, rows in per_file)
+        self.manifest.record(name, fp, n, len(per_file), time.time() - t0)
+        self.manifest.record_lineage(name, fp, per_file)
+        return out
+
+
+def _in_memory(name, step, compute, consumers=1, config=()) -> DataFrame:
+    """In-memory boundaries, fixed by how many later stages read the output."""
+    df = compute()
+    if consumers == 0:
+        df.count()
+    elif consumers > 1:
+        # persist() keeps compressed COLUMNAR blocks (GC-friendly at high
+        # thread counts — localCheckpoint's deserialized row storage
+        # causes GCLocker thrash with 32 executor threads + Arrow JNI).
+        # The caller releases it after its last reader.
+        df = df.persist()
+    return df
 
 
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     alias_dict: DataFrame,
-    out_dir: str,
+    out_dir: str | None = None,
     n_buckets: int = 32,
     resume: bool = True,
     input_fingerprint: str = "",
     table_namespace: str | None = None,
     catalog: str = "iceberg",
+    alias_count: int | None = None,
 ) -> DataFrame:
-    """pages + alias dictionary → canonical KGTK edges (also on disk).
+    """pages + alias dictionary → canonical KGTK edges (node1, label, node2, id).
+
+    With ``out_dir`` every stage is stored and resumable (sink mode);
+    without it the run stays in memory. Both modes give the same edges.
 
     ``input_fingerprint`` should identify the input snapshot (e.g. its
     generator seed/row count or an Iceberg snapshot id); stages chain
@@ -152,51 +179,56 @@ def run_pipeline(
     directories to catalog tables (``<namespace>.<stage>``) — Iceberg
     snapshot commits when ``catalog`` is configured, session-catalog
     tables otherwise. Resume semantics are identical on both sinks.
+
+    ``alias_count`` is the alias-dictionary row count when the caller
+    already knows it; otherwise the dictionary is counted once here.
+    ``resume``, ``input_fingerprint``, ``table_namespace`` and ``catalog``
+    only apply with ``out_dir``.
     """
-    manifest = StageManifest(spark, out_dir)
-    committed = manifest.committed() if resume else {}
-    sink = dict(table_namespace=table_namespace, catalog=catalog)
-
-    # size the dictionary ONCE; each stage then picks broadcast vs the
-    # salted shuffle path without re-counting
-    n_aliases = alias_dict.count()
-
-    fp_text = _fp("extract_text", input_fingerprint)
-    text_df = _run_stage(
-        spark, manifest, committed, out_dir, "text", fp_text,
-        lambda: S.extract_text(pages), resume, **sink,
+    if alias_count is None:
+        # size the dictionary ONCE; each stage then picks broadcast vs the
+        # salted shuffle path without re-counting
+        alias_count = alias_dict.count()
+    kw = {"alias_count": alias_count}
+    stage = _in_memory if out_dir is None else _Sink(
+        spark, out_dir, resume, input_fingerprint, table_namespace, catalog
     )
 
-    fp_mentions = _fp("detect_mentions", fp_text)
-    mentions = _run_stage(
-        spark, manifest, committed, out_dir, "mentions", fp_mentions,
-        lambda: S.detect_mentions(text_df, alias_dict, alias_count=n_aliases), resume, **sink,
+    text = stage("text", "extract_text", lambda: S.extract_text(pages), consumers=2)
+    try:
+        mentions = stage(
+            "mentions", "detect_mentions", lambda: S.detect_mentions(text, alias_dict, **kw)
+        )
+        # mention detection + linking are pipeline deliverables (provenance
+        # spans) that no later stage reads
+        stage(
+            "linked", "link_entities", lambda: S.link_entities(mentions, alias_dict, **kw),
+            consumers=0,
+        )
+        triples = stage(
+            "triples", "extract_triples", lambda: S.extract_triples(text, alias_dict, **kw)
+        )
+        # Dedup BEFORE the rewrite: canonicalize's per-row rewrite commutes
+        # with dropDuplicates on (node1, label, node2), and materialize
+        # dedups again after the rewrite anyway — so the two rewrite joins
+        # touch the distinct edge set (~2% of rows here) instead of every
+        # raw triple. localCheckpoint: connected components, the sameAs
+        # split and the rewrite all read it. Every node extract_triples
+        # emits comes from best_alias_map, so the alias-dictionary size
+        # bounds the rewrite map and canonicalize skips its size probe.
+        canon = stage(
+            "canonical", "canonicalize",
+            lambda: S.canonicalize(
+                triples.select("node1", "label", "node2").dropDuplicates().localCheckpoint(),
+                size_hint=alias_count,
+            ),
+        )
+    finally:
+        text.unpersist()  # after its last reader; a no-op for a stored stage
+    return stage(
+        "edges", "materialize", lambda: S.materialize(canon, n_buckets=n_buckets),
+        config=(str(n_buckets),),
     )
-
-    fp_linked = _fp("link_entities", fp_mentions)
-    linked = _run_stage(
-        spark, manifest, committed, out_dir, "linked", fp_linked,
-        lambda: S.link_entities(mentions, alias_dict, alias_count=n_aliases), resume, **sink,
-    )
-
-    fp_triples = _fp("extract_triples", fp_linked)
-    triples = _run_stage(
-        spark, manifest, committed, out_dir, "triples", fp_triples,
-        lambda: S.extract_triples(text_df, alias_dict, alias_count=n_aliases), resume, **sink,
-    )
-
-    fp_canon = _fp("canonicalize", fp_triples)
-    canon = _run_stage(
-        spark, manifest, committed, out_dir, "canonical", fp_canon,
-        lambda: S.canonicalize(triples), resume, **sink,
-    )
-
-    fp_edges = _fp("materialize", fp_canon, str(n_buckets))
-    edges = _run_stage(
-        spark, manifest, committed, out_dir, "edges", fp_edges,
-        lambda: S.materialize(canon, n_buckets=n_buckets), resume, **sink,
-    )
-    return edges
 
 
 def run_pipeline_fused(
@@ -206,49 +238,8 @@ def run_pipeline_fused(
     n_buckets: int = 32,
     alias_count: int | None = None,
 ) -> DataFrame:
-    """Single-lineage variant: all six stages fused into one Catalyst plan
-    with no intermediate parquet or manifest.
-
-    This is the throughput configuration for benchmarking and for
-    inputs small enough to not need mid-pipeline restart points; the
-    manifest-materializing ``run_pipeline`` is the resumable production
-    mode. Identical results by construction — both call the same stage
-    functions.
-    """
-    # text is consumed by both the mention pass and the triple pass;
-    # persist() keeps it as compressed COLUMNAR blocks (GC-friendly at
-    # high thread counts — localCheckpoint's deserialized row storage
-    # causes GCLocker thrash with 32 executor threads + Arrow JNI).
-    n_aliases = alias_dict.count() if alias_count is None else alias_count
-    text_df = S.extract_text(pages).persist()
-    text_df.count()
-    # mention detection + linking are pipeline deliverables (provenance
-    # spans); force them so the fused benchmark includes their cost.
-    linked = S.link_entities(
-        S.detect_mentions(text_df, alias_dict, alias_count=n_aliases),
-        alias_dict,
-        alias_count=n_aliases,
-    )
-    linked.count()
-    # triples consumed twice by canonicalize (sameAs split + rewrite).
-    triples = S.extract_triples(text_df, alias_dict, alias_count=n_aliases).persist()
-    triples.count()
-    # Dedup BEFORE the rewrite: canonicalize's per-row rewrite commutes
-    # with dropDuplicates on (node1, label, node2), and materialize
-    # dedups again after the rewrite anyway — so the two broadcast
-    # rewrite joins touch the distinct edge set (~2% of rows here)
-    # instead of every raw triple. localCheckpoint so the distinct
-    # shuffle isn't recomputed for the sameAs split AND the rewrite.
-    dedup = (
-        triples.select("node1", "label", "node2")
-        .dropDuplicates()
-        .localCheckpoint()
-    )
-    # rewrite-map rows are bounded by the alias dictionary (every
-    # sameAs endpoint is a dictionary entity) — pass the bound so
-    # canonicalize skips its size probe (no extra job in the hot path)
-    canon = S.canonicalize(dedup, size_hint=n_aliases)
-    return S.materialize(canon, n_buckets=n_buckets)
+    """``run_pipeline`` in memory (no ``out_dir``)."""
+    return run_pipeline(spark, pages, alias_dict, None, n_buckets, alias_count=alias_count)
 
 
 def triple_precision_recall(

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgtk_spark.graph.connected_components import components_auto  # noqa: F401 (stage import)
 from kgtk_spark.pipeline.aho import automaton_for, find_mentions, token_matcher_for
 from kgtk_spark.pipeline.webgen import PREDICATES, SAME_AS_LABEL, SAME_AS_PHRASE
 
@@ -424,12 +423,15 @@ def canonicalize(
         F.col("node").alias("__from__"), F.col("component").alias("__to__")
     )
     # ``size_hint``: an upper bound on rewrite rows the CALLER already
-    # knows (e.g. the fused pipeline bounds it by the alias-dictionary
-    # size) — skips the persist + count probe, keeping the hot path
-    # barrier-free. Without a hint, size once; persist so the CC
+    # knows (the pipeline runner bounds it by the alias-dictionary
+    # size) — skips the checkpoint + count probe, keeping the hot path
+    # barrier-free. Without a hint, size once; checkpoint so the CC
     # fixpoint doesn't replay per consumer (node1 pass + node2 pass).
+    # Not persist(): the returned plan is lazy, so nothing here could
+    # unpersist after both consumers, while checkpoint blocks are freed
+    # with the frame.
     if size_hint is None:
-        rewrite = rewrite.persist()
+        rewrite = rewrite.localCheckpoint(eager=False)
         n_rewrite = rewrite.count()
     else:
         n_rewrite = size_hint

@@ -75,35 +75,6 @@ def canonicalize_columns(df: DataFrame) -> DataFrame:
     return out
 
 
-def merge_columns(*column_lists: list[str]) -> list[str]:
-    """Alias-aware merged output schema for cat/join (kgtk/join/kgtkmergecolumns.py:36-86).
-
-    Each incoming column maps to its canonical name if it is an alias;
-    order of first appearance wins.
-    """
-    merged: list[str] = []
-    for cols in column_lists:
-        for c in cols:
-            canon = c
-            for canonical, aliases in ALIAS_GROUPS.items():
-                if c.lower() in [a.lower() for a in aliases]:
-                    canon = canonical
-                    break
-            if canon not in merged:
-                merged.append(canon)
-    return merged
-
-
-def empty_as_null(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """KGTK empty-string cells → SQL NULL for the given (default: string) columns."""
-    targets = cols or [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    exprs = [
-        (F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c) if c in targets else F.col(c))
-        for c in df.columns
-    ]
-    return df.select(*exprs)
-
-
 def null_as_empty(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """SQL NULL → KGTK empty string (for writing / byte-parity surfaces)."""
     targets = cols or [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]

@@ -2,8 +2,8 @@
 
 The reference has NO streaming subsystem (its only "streams" are Unix
 pipes between CLI stages, kgtk/cli_entry.py:136-163) — this module is
-the Spark-native extension: a streaming edge-ingest that applies the
-same stage functions incrementally, with watermarked event-time
+the Spark-native extension: a streaming edge-ingest that runs the
+same pipeline definition per micro-batch, with watermarked event-time
 windows for late data.
 """
 

@@ -1,9 +1,9 @@
 """Streaming KG ingest: web pages arrive as files; edges leave as a stream.
 
-Batch/stream parity by construction: the stream pipeline calls the SAME
-stage functions (extract_text → extract_triples) per micro-batch via
-``foreachBatch``, so a row that flows through the batch pipeline and the
-stream produces identical edges. Watermarked windows handle late pages.
+Batch/stream parity by construction: every micro-batch runs the SAME
+pipeline definition (``run_pipeline`` in memory) via ``foreachBatch``,
+so a page that flows through the batch pipeline and the stream produces
+identical edges and KGTK ids. Watermarked windows handle late pages.
 """
 
 from __future__ import annotations
@@ -28,24 +28,23 @@ def stream_edges_from_pages(
     and stops (test/batch-catchup mode); otherwise micro-batches run
     continuously. Exactly-once via the checkpoint + parquet sink.
     """
-    from kgtk_spark.pipeline import stages as S
+    from kgtk_spark.pipeline.runner import run_pipeline
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(pages_dir)
     )
+    # sized once per stream, not per micro-batch
+    alias_count = alias_dict.count()
+    n_buckets = spark.sparkContext.defaultParallelism
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        text_df = S.extract_text(batch_df)
-        triples = S.extract_triples(text_df, alias_dict)
-        edges = S.canonicalize(triples)
-        (
-            edges.dropDuplicates(["node1", "label", "node2"])
-            .withColumn("id", F.concat_ws("-", "node1", "label", "node2"))
-            .write.mode("append")
-            .parquet(output_dir)
+        edges = run_pipeline(
+            batch_df.sparkSession, batch_df, alias_dict,
+            n_buckets=n_buckets, alias_count=alias_count,
         )
+        edges.write.mode("append").parquet(output_dir)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -21,6 +21,7 @@ from kgtk_spark.pipeline import (
     triple_precision_recall,
 )
 from kgtk_spark.pipeline.aho import AhoCorasick, find_mentions
+from kgtk_spark.pipeline.runner import run_pipeline_fused
 from kgtk_spark.pipeline.stages import extract_text_bytes
 from kgtk_spark.pipeline.webgen import generate_page_rows, html_of_text
 
@@ -148,6 +149,10 @@ def test_end_to_end_precision_recall(spark, tmp_path):
     # KGTK schema + non-null ids
     assert edges.columns == ["node1", "label", "node2", "id"]
     assert edges.filter(F.col("id").isNull() | (F.col("id") == "")).count() == 0
+    # the in-memory run of the same pipeline definition gives the same edges
+    fused = run_pipeline_fused(spark, pages, ad, n_buckets=4)
+    key = lambda r: (r["node1"], r["label"], r["node2"], r["id"])  # noqa: E731
+    assert set(map(key, fused.collect())) == set(map(key, edges.collect()))
 
 
 def test_pipeline_resume_skips_committed(spark, tmp_path):
@@ -159,6 +164,12 @@ def test_pipeline_resume_skips_committed(spark, tmp_path):
     manifest1 = spark.read.parquet(f"{out_dir}/_manifest")
     n1 = manifest1.count()
     assert n1 == 6  # six stages committed
+
+    # triples are deduplicated before canonicalize: the canonical stage
+    # holds distinct (node1, label, node2) rows, without url
+    canonical = spark.read.parquet(f"{out_dir}/canonical")
+    assert canonical.columns == ["node1", "label", "node2"]
+    assert canonical.count() == canonical.distinct().count() > 0
 
     # Rerun: everything committed → no new manifest rows.
     run_pipeline(spark, pages, ad, out_dir, n_buckets=2, input_fingerprint="s13")

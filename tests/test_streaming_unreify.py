@@ -10,6 +10,7 @@ from kgtk_spark.pipeline import (
     alias_dictionary_df,
     expected_edges_df,
     generate_pages_df,
+    run_pipeline,
     triple_precision_recall,
 )
 from kgtk_spark.streaming import stream_edges_from_pages, windowed_edge_counts
@@ -51,6 +52,14 @@ def test_streaming_edges_match_batch(spark, tmp_path):
     got = spark.read.parquet(out_dir)
     p, r = triple_precision_recall(got, expected_edges_df(spark, world))
     assert p >= 0.95 and r >= 0.95
+
+    # streamed edges carry the same KGTK ids as the batch pipeline's
+    batch = run_pipeline(spark, pages, ad, str(tmp_path / "batch"), n_buckets=2)
+    both = got.join(
+        batch.withColumnRenamed("id", "batch_id"), ["node1", "label", "node2"]
+    ).collect()
+    assert both
+    assert all(r["id"] == r["batch_id"] for r in both)
 
 
 def test_windowed_counts_schema(spark, tmp_path):
