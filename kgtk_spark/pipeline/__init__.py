@@ -16,6 +16,11 @@ only the outputs that two or more later steps read:
 5. canonicalize    — connected-components over sameAs clusters
 6. materialize     — KGTK-schema edges (node1, label, node2, id),
                      bucketed by subject hash
+
+``run_pipeline`` runs stages 1, 2 and the SVO matching of 4 as one
+Python pass per Arrow batch (``stages.find_mentions_and_triples``): page
+text crosses the Python boundary once, and only mention and raw-triple
+rows come back. The stage functions above remain the per-stage API.
 """
 
 from kgtk_spark.pipeline.webgen import (

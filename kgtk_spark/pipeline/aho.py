@@ -15,6 +15,7 @@ Matches are token-boundary checked so "Kalo 1" doesn't fire inside
 from __future__ import annotations
 
 import re
+from itertools import accumulate, compress
 
 
 class AhoCorasick:
@@ -113,73 +114,72 @@ class TokenDictMatcher:
     """
 
     __slots__ = ("index",)
-    _TOK = re.compile(r"\S+")
+    # tokens at even positions, the whitespace runs between them at odd
+    _SPLIT = re.compile(r"(\s+)")
 
     def __init__(self, patterns: list[str] | tuple[str, ...]):
-        index: dict[str, list[tuple[str, ...]]] = {}
+        # first token → [(all tokens, surface)], longest first
+        index: dict[str, list[tuple[list[str], str]]] = {}
         for p in patterns:
-            toks = tuple(p.split())
-            if not toks:
-                continue
-            index.setdefault(toks[0], []).append(toks)
+            toks = p.split()
+            if toks:
+                index.setdefault(toks[0], []).append((toks, " ".join(toks)))
         for cands in index.values():
-            cands.sort(key=len, reverse=True)
+            cands.sort(key=lambda c: len(c[0]), reverse=True)
         self.index = index
 
     def find(self, text: str) -> list[tuple[int, int, str]]:
-        # words in one C pass; spans materialized lazily per hit from
-        # the match objects (most tokens miss the index entirely, so
-        # avoid building 3-tuples for every token)
-        matches = self._TOK.findall(text)
-        out: list[tuple[int, int, str]] = []
-        i, n = 0, len(matches)
+        # Tokens in one C-level split; only tokens that start an alias
+        # (found by a C-level map over the index) reach the Python loop.
+        toks = text.split()
         index = self.index
-        get = index.get
-        hits_idx: list[tuple[int, int, str]] = []
-        while i < n:
-            cands = get(matches[i])
-            if cands:
-                for c in cands:
-                    L = len(c)
-                    if i + L <= n and all(
-                        matches[i + k] == c[k] for k in range(1, L)
-                    ):
-                        hits_idx.append((i, i + L - 1, " ".join(c)))
-                        i += L
-                        break
-                else:
-                    i += 1
-            else:
-                i += 1
-        if not hits_idx:
-            return out
-        # one finditer pass to resolve char offsets of hit tokens only
-        spans = [m.span() for m in self._TOK.finditer(text)]
-        for i0, i1, pat in hits_idx:
-            out.append((spans[i0][0], spans[i1][1], pat))
+        out: list[tuple[int, int, str]] = []
+        starts = None
+        free = 0  # first token not inside an earlier hit
+        for i in compress(range(len(toks)), map(index.__contains__, toks)):
+            if i < free:
+                continue
+            for cand, surface in index[toks[i]]:
+                k = i + len(cand)
+                if toks[i:k] == cand:
+                    if starts is None:
+                        starts = self._starts(text, toks)
+                    out.append((starts[i], starts[k - 1] + len(toks[k - 1]), surface))
+                    free = k
+                    break
         return out
 
+    def _starts(self, text: str, toks: list[str]) -> list[int]:
+        """The char offset of every token of ``text``, from C-level passes."""
+        if sum(map(len, toks)) + len(toks) - 1 == len(text):
+            # one whitespace char between tokens and none around them
+            return list(accumulate(map((1).__add__, map(len, toks)), initial=0))
+        # token and whitespace-run lengths from one split, summed
+        parts = self._SPLIT.split(text)
+        starts = list(accumulate(map(len, parts), initial=0))[::2]
+        return starts[1:] if parts[0] == "" else starts
 
-_AUTOMATON_CACHE: dict[int, AhoCorasick] = {}
-_TOKEN_CACHE: dict[int, TokenDictMatcher] = {}
+
+# The last dictionary and its matcher, per matcher class. The entry
+# holds the dictionary itself and is matched by identity: keyed on
+# ``id()`` alone, a freed dictionary's reused address would hand the
+# next dictionary a stale matcher.
+_LAST: dict[type, tuple[object, object]] = {}
+
+
+def _cached(kind: type, patterns: tuple[str, ...] | list[str]):
+    last = _LAST.get(kind)
+    if last is None or last[0] is not patterns:
+        # hold at most one per class — dictionaries are big
+        last = _LAST[kind] = (patterns, kind(patterns))
+    return last[1]
 
 
 def token_matcher_for(patterns: tuple[str, ...] | list[str]) -> TokenDictMatcher:
-    key = id(patterns)
-    m = _TOKEN_CACHE.get(key)
-    if m is None:
-        m = TokenDictMatcher(patterns)
-        _TOKEN_CACHE.clear()
-        _TOKEN_CACHE[key] = m
-    return m
+    """Executor-local cache: one token matcher per dictionary object."""
+    return _cached(TokenDictMatcher, patterns)
 
 
 def automaton_for(patterns: tuple[str, ...] | list[str]) -> AhoCorasick:
-    """Executor-local cache: one automaton per distinct dictionary object."""
-    key = id(patterns)
-    a = _AUTOMATON_CACHE.get(key)
-    if a is None:
-        a = AhoCorasick(list(patterns))
-        _AUTOMATON_CACHE.clear()  # hold at most one — dictionaries are big
-        _AUTOMATON_CACHE[key] = a
-    return a
+    """Executor-local cache: one automaton per dictionary object."""
+    return _cached(AhoCorasick, patterns)

@@ -15,11 +15,21 @@ boundary. Whether ``out_dir`` is given decides the boundary:
   is the catalog-free equivalent (the parquet job commit protocol makes
   the directory write atomic; the manifest row is written only after).
 - **in memory** (no ``out_dir``): nothing is written; the graph fixes
-  each boundary by the number of stages that read its output. ``text``
-  (read by mention detection and triple extraction) is persisted and
-  released after its last reader; ``linked`` (read by none, but a
-  pipeline deliverable) is counted so a run includes its cost; every
-  other stage stays lazy.
+  each boundary by the number of stages that read its output. ``linked``
+  (read by none, but a pipeline deliverable) is counted so a run
+  includes its cost; every other stage stays lazy.
+
+Text extraction, mention detection and SVO matching run as ONE Python
+pass per Arrow batch (``stages.find_mentions_and_triples``); its tagged
+output is local-checkpointed for its two readers, linking and triple
+resolution, and so is the alias dictionary for its three (the alias
+broadcast and two best-sense maps). In memory the pass reads the pages,
+so ``text`` is never materialized; a sink stores the ``text`` stage and
+runs the pass over it, so stage names, manifest and lineage are those of
+the six stages. Above ``stages.ALIAS_BROADCAST_THRESHOLD`` aliases the
+dictionary is not broadcast: ``text`` is then persisted (or stored) for
+the distributed mention join and the separate triple pass, and released
+after its last reader.
 
 In both modes the raw triples are deduplicated on (node1, label, node2)
 before ``canonicalize``, and that distinct set is local-checkpointed.
@@ -30,6 +40,7 @@ changing an upstream stage or a config invalidates everything below it.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import time
@@ -194,20 +205,45 @@ def run_pipeline(
         spark, out_dir, resume, input_fingerprint, table_namespace, catalog
     )
 
-    text = stage("text", "extract_text", lambda: S.extract_text(pages), consumers=2)
+    text = None
     try:
-        mentions = stage(
-            "mentions", "detect_mentions", lambda: S.detect_mentions(text, alias_dict, **kw)
-        )
+        if alias_count > S.ALIAS_BROADCAST_THRESHOLD:
+            # too big to broadcast: the distributed mention join and the
+            # triple pass each read the text
+            text = stage("text", "extract_text", lambda: S.extract_text(pages), consumers=2)
+            detect = lambda: S.detect_mentions(text, alias_dict, **kw)  # noqa: E731
+            extract = lambda: S.extract_triples(text, alias_dict, **kw)  # noqa: E731
+        else:
+            # three readers: the alias broadcast and the best-sense maps of
+            # linking and triple resolution; the first to run keeps it
+            alias_dict = alias_dict.localCheckpoint(eager=False)
+            # One Python pass finds mentions and raw triples together. In
+            # memory it reads the pages, so text is never materialized; a
+            # sink stores the text stage first and the pass reads that.
+            if out_dir is not None:
+                text = stage("text", "extract_text", lambda: S.extract_text(pages))
+
+            @functools.cache
+            def found() -> DataFrame:
+                # Built on first use, so a sink that resumes both readers
+                # never collects the aliases. Kept for its two readers by a
+                # local checkpoint: its blocks are freed with the frame, and
+                # it builds faster than the compressed columnar cache of
+                # persist() (~1M short rows here).
+                return S.find_mentions_and_triples(
+                    pages if text is None else text, alias_dict
+                ).localCheckpoint(eager=False)
+
+            detect = lambda: S.mentions_of(found())  # noqa: E731
+            extract = lambda: S.resolve_triples(S.triples_of(found()), alias_dict, **kw)  # noqa: E731
+        mentions = stage("mentions", "detect_mentions", detect)
         # mention detection + linking are pipeline deliverables (provenance
         # spans) that no later stage reads
         stage(
             "linked", "link_entities", lambda: S.link_entities(mentions, alias_dict, **kw),
             consumers=0,
         )
-        triples = stage(
-            "triples", "extract_triples", lambda: S.extract_triples(text, alias_dict, **kw)
-        )
+        triples = stage("triples", "extract_triples", extract)
         # Dedup BEFORE the rewrite: canonicalize's per-row rewrite commutes
         # with dropDuplicates on (node1, label, node2), and materialize
         # dedups again after the rewrite anyway — so the two rewrite joins
@@ -224,7 +260,8 @@ def run_pipeline(
             ),
         )
     finally:
-        text.unpersist()  # after its last reader; a no-op for a stored stage
+        if text is not None:
+            text.unpersist()  # after its last reader; a no-op for a stored stage
     return stage(
         "edges", "materialize", lambda: S.materialize(canon, n_buckets=n_buckets),
         config=(str(n_buckets),),

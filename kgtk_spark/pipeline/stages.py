@@ -1,8 +1,10 @@
 """The six pipeline stages, each a pure DataFrame → DataFrame function.
 
 Scale notes (the whole point):
-- text extraction / mention detection are mapInPandas (Arrow-batched,
-  no shuffle, linear in input bytes);
+- text extraction / mention detection / SVO matching are mapInPandas
+  (Arrow-batched, no shuffle, linear in input bytes), each on its own
+  and fused into one pass (find_mentions_and_triples) that the runner
+  uses, so page text crosses the Python boundary once;
 - the alias dictionary is broadcast — mention→entity resolution is a
   map-side join, immune to hub-entity skew. Dictionaries above
   ALIAS_BROADCAST_THRESHOLD rows switch AUTOMATICALLY to the
@@ -26,6 +28,7 @@ import html as html_mod
 import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,6 +57,19 @@ def extract_text_bytes(html: bytes) -> str:
     return html_mod.unescape(body).strip()
 
 
+def _fill_text(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch: fill null ``text`` from ``html``, then drop
+    ``html`` (a batch without ``html`` passes through)."""
+    if "html" not in pdf:
+        return pdf
+    need = pdf["text"].isna() & pdf["html"].notna()
+    if need.any():
+        pdf.loc[need, "text"] = pdf.loc[need, "html"].map(
+            lambda b: extract_text_bytes(bytes(b))
+        )
+    return pdf.drop(columns=["html"])
+
+
 def extract_text(pages: DataFrame) -> DataFrame:
     """Fill null ``text`` from ``html``; pages with text pass through."""
     out_schema = T.StructType(
@@ -62,12 +78,7 @@ def extract_text(pages: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            need = pdf["text"].isna() & pdf["html"].notna()
-            if need.any():
-                pdf.loc[need, "text"] = pdf.loc[need, "html"].map(
-                    lambda b: extract_text_bytes(bytes(b))
-                )
-            yield pdf.drop(columns=["html"])
+            yield _fill_text(pdf)
 
     return pages.mapInPandas(run, schema=out_schema)
 
@@ -122,46 +133,44 @@ def detect_mentions(
     """
     if _alias_count(alias_dict, alias_count) > broadcast_threshold:
         return detect_mentions_distributed(pages, alias_dict)
-    spark = pages.sparkSession
+    bc = _broadcast_aliases(alias_dict)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if matcher == "token":
+            find = token_matcher_for(bc.value).find
+        else:
+            automaton = automaton_for(bc.value)
+            find = lambda t: find_mentions(t, automaton)  # noqa: E731
+        for pdf in batches:
+            yield _mention_frame(pdf["url"], pdf["text"], find)
+
+    return pages.select("url", "text").mapInPandas(run, schema=MENTIONS_SCHEMA)
+
+
+def _broadcast_aliases(alias_dict: DataFrame):
+    """The distinct aliases, collected once on the driver and broadcast."""
     aliases = tuple(
         r["alias"] for r in alias_dict.select("alias").distinct().collect()
     )
-    bc = spark.sparkContext.broadcast(aliases)
-    use_token = matcher == "token"
+    return alias_dict.sparkSession.sparkContext.broadcast(aliases)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        if use_token:
-            m = token_matcher_for(bc.value)
-            finder = m.find
-        else:
-            automaton = automaton_for(bc.value)
-            finder = lambda t: find_mentions(t, automaton)  # noqa: E731
-        empty: list = []
-        for pdf in batches:
-            # per-page match lists, then ONE vectorized assembly: the
-            # url column is np.repeat over per-page counts and the int
-            # spans land in int32 numpy arrays — no per-mention Python
-            # append into object columns (guide §4.2).
-            per = [finder(t) if t else empty for t in pdf["text"]]
-            counts = [len(x) for x in per]
-            flat = [hit for page in per for hit in page]
-            n = len(flat)
-            yield pd.DataFrame(
-                {
-                    "url": np.repeat(pdf["url"].to_numpy(), counts),
-                    "begin": np.fromiter(
-                        (h[0] for h in flat), dtype=np.int32, count=n
-                    ),
-                    "end": np.fromiter(
-                        (h[1] for h in flat), dtype=np.int32, count=n
-                    ),
-                    "surface": [h[2] for h in flat],
-                }
-            )
-
-    return pages.select("url", "text").mapInPandas(run, schema=MENTIONS_SCHEMA)
+def _mention_frame(urls: pd.Series, texts: pd.Series, find) -> pd.DataFrame:
+    """One Arrow batch's mentions. Per-page match lists, then ONE
+    vectorized assembly: the url column is np.repeat over per-page
+    counts and the spans land in int32 numpy arrays — no per-mention
+    Python append into object columns (guide §4.2)."""
+    per = [find(t) if t else () for t in texts]
+    flat = [hit for page in per for hit in page]
+    begin, end, surface = zip(*flat) if flat else ((), (), ())
+    return pd.DataFrame(
+        {
+            "url": np.repeat(urls.to_numpy(), [len(x) for x in per]),
+            "begin": np.array(begin, dtype=np.int32),
+            "end": np.array(end, dtype=np.int32),
+            "surface": list(surface),
+        }
+    )
 
 
 _TOK_RE = re.compile(r"\S+")
@@ -324,35 +333,44 @@ _PHRASE_RE = re.compile(
 )
 
 
+def _triple_frame(urls: pd.Series, texts: pd.Series) -> pd.DataFrame:
+    """One Arrow batch's SVO matches, one row per matched sentence."""
+    match = _PHRASE_RE.match
+    hits = [
+        (url, *m.group("subj", "phrase", "obj"))
+        for url, text in zip(urls, texts)
+        if text
+        for m in map(match, map(str.strip, text.split("\n")))
+        if m
+    ]
+    url, subj, phrase, obj = zip(*hits) if hits else ((), (), (), ())
+    return pd.DataFrame(
+        {
+            "url": list(url),
+            "subj_surface": list(subj),
+            "pred": [_PHRASE_TO_PRED[p] for p in phrase],
+            "obj_surface": list(obj),
+        }
+    )
+
+
 def raw_triples(pages: DataFrame) -> DataFrame:
     """(url, subj_surface, pred, obj_surface) per matched sentence."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {"url": [], "subj_surface": [], "pred": [], "obj_surface": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for sent in text.split("\n"):
-                    m = _PHRASE_RE.match(sent.strip())
-                    if not m:
-                        continue
-                    rows["url"].append(url)
-                    rows["subj_surface"].append(m.group("subj"))
-                    rows["pred"].append(_PHRASE_TO_PRED[m.group("phrase")])
-                    rows["obj_surface"].append(m.group("obj"))
-            yield pd.DataFrame(rows)
+            yield _triple_frame(pdf["url"], pdf["text"])
 
     return pages.select("url", "text").mapInPandas(run, schema=TRIPLE_SCHEMA)
 
 
-def extract_triples(
-    pages: DataFrame,
+def resolve_triples(
+    raw: DataFrame,
     alias_dict: DataFrame,
     broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
     alias_count: int | None = None,
 ) -> DataFrame:
-    """Resolve SVO surface forms to entities — two broadcast joins.
+    """Raw SVO triples (TRIPLE_SCHEMA) → (url, node1, label, node2).
 
     Subject and object surfaces each take one broadcast hash join
     against the best-sense alias map (same map linking used): the whole
@@ -362,15 +380,14 @@ def extract_triples(
     """
     big = _alias_count(alias_dict, alias_count) > broadcast_threshold
     best = best_alias_map(alias_dict)
-    t = raw_triples(pages)
     s = best.select(F.col("surface").alias("subj_surface"), F.col("entity").alias("subj"))
     o = best.select(F.col("surface").alias("obj_surface"), F.col("entity").alias("obj"))
     if big:
         from kgtk_spark.textops.skew import salted_join
 
-        joined = salted_join(salted_join(t, s, "subj_surface"), o, "obj_surface")
+        joined = salted_join(salted_join(raw, s, "subj_surface"), o, "obj_surface")
     else:
-        joined = t.join(F.broadcast(s), "subj_surface").join(
+        joined = raw.join(F.broadcast(s), "subj_surface").join(
             F.broadcast(o), "obj_surface"
         )
     return joined.select(
@@ -379,6 +396,75 @@ def extract_triples(
         F.col("pred").alias("label"),
         F.col("obj").alias("node2"),
     )
+
+
+def extract_triples(
+    pages: DataFrame,
+    alias_dict: DataFrame,
+    broadcast_threshold: int = ALIAS_BROADCAST_THRESHOLD,
+    alias_count: int | None = None,
+) -> DataFrame:
+    """Match SVO sentences in ``text`` and resolve their surface forms
+    to entities (``raw_triples`` then ``resolve_triples``)."""
+    return resolve_triples(
+        raw_triples(pages), alias_dict, broadcast_threshold, alias_count
+    )
+
+
+# ---------------------------------------------------------------------------
+# Stages 1, 2 and 4 in one Python pass
+# ---------------------------------------------------------------------------
+
+# ``kind`` tags of the fused pass's rows
+MENTION, TRIPLE = 0, 1
+
+FOUND_SCHEMA = T.StructType(
+    [T.StructField("kind", T.ByteType())]
+    + MENTIONS_SCHEMA.fields
+    + [f for f in TRIPLE_SCHEMA.fields if f.name != "url"]
+)
+
+
+def find_mentions_and_triples(pages: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """Stages 1, 2 and 4 in one ``mapInPandas`` pass: per Arrow batch,
+    fill ``text`` from ``html`` (as ``extract_text``), find dictionary
+    mentions with the broadcast token matcher (as ``detect_mentions``) and
+    match SVO sentences (as ``raw_triples``). Page text crosses the
+    Python boundary once and never comes back.
+
+    Returns FOUND_SCHEMA rows tagged by ``kind``: MENTION rows fill the
+    MENTIONS_SCHEMA columns, TRIPLE rows the TRIPLE_SCHEMA columns, the
+    other columns are null. ``mentions_of`` and ``triples_of`` split
+    them. Broadcast dictionaries only: above ALIAS_BROADCAST_THRESHOLD
+    mentions need ``detect_mentions_distributed`` over stored text.
+    """
+    bc = _broadcast_aliases(alias_dict)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        find = token_matcher_for(bc.value).find
+        for pdf in batches:
+            pdf = _fill_text(pdf)
+            mentions = _mention_frame(pdf["url"], pdf["text"], find)
+            yield mentions.assign(
+                kind=np.int8(MENTION), subj_surface=None, pred=None, obj_surface=None
+            )
+            triples = _triple_frame(pdf["url"], pdf["text"])
+            yield triples.assign(
+                kind=np.int8(TRIPLE), begin=None, end=None, surface=None
+            )
+
+    cols = [c for c in ("url", "html", "text") if c in pages.columns]
+    return pages.select(*cols).mapInPandas(run, schema=FOUND_SCHEMA)
+
+
+def mentions_of(found: DataFrame) -> DataFrame:
+    """The MENTION rows of ``find_mentions_and_triples``, as MENTIONS_SCHEMA."""
+    return found.where(F.col("kind") == MENTION).select(*MENTIONS_SCHEMA.names)
+
+
+def triples_of(found: DataFrame) -> DataFrame:
+    """The TRIPLE rows of ``find_mentions_and_triples``, as TRIPLE_SCHEMA."""
+    return found.where(F.col("kind") == TRIPLE).select(*TRIPLE_SCHEMA.names)
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,12 @@ and resume-from-manifest."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgtk_spark.pipeline import (
     alias_dictionary_df,
@@ -20,10 +24,17 @@ from kgtk_spark.pipeline import (
     run_pipeline,
     triple_precision_recall,
 )
-from kgtk_spark.pipeline.aho import AhoCorasick, find_mentions
+from kgtk_spark.pipeline import stages
+from kgtk_spark.pipeline.aho import (
+    AhoCorasick,
+    TokenDictMatcher,
+    automaton_for,
+    find_mentions,
+    token_matcher_for,
+)
 from kgtk_spark.pipeline.runner import run_pipeline_fused
 from kgtk_spark.pipeline.stages import extract_text_bytes
-from kgtk_spark.pipeline.webgen import generate_page_rows, html_of_text
+from kgtk_spark.pipeline.webgen import PAGES_SCHEMA, generate_page_rows, html_of_text
 
 
 def test_aho_corasick_basic():
@@ -38,6 +49,91 @@ def test_find_mentions_boundaries():
     got = {(m[2]) for m in find_mentions(text, a)}
     # longest match wins at position 0; "Kalo 1" inside "Kalo 10" suppressed
     assert got == {"Kalo 10", "Mira", "Kalo 1"}
+
+
+def _brute_force_find(aliases, text):
+    """Reference for TokenDictMatcher.find: at each token, from left to
+    right, the longest alias whose tokens equal the next tokens wins and
+    the scan resumes after it."""
+    toks = [(m.start(), m.end(), m.group()) for m in re.finditer(r"\S+", text)]
+    words = [t[2] for t in toks]
+    out, i = [], 0
+    while i < len(toks):
+        best = max(
+            (a.split() for a in aliases if words[i : i + len(a.split())] == a.split()),
+            key=len,
+            default=None,
+        )
+        if best is None:
+            i += 1
+            continue
+        j = i + len(best) - 1
+        out.append((toks[i][0], toks[j][1], " ".join(best)))
+        i = j + 1
+    return out
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [
+        # leading and trailing whitespace
+        ("  Alpha Beta  ", [(2, 12, "Alpha Beta")]),
+        ("\n\tKalo", [(2, 6, "Kalo")]),
+        # tabs, newlines and runs of spaces between alias tokens
+        ("Alpha\tBeta", [(0, 10, "Alpha Beta")]),
+        ("x Alpha \n  Beta y", [(2, 15, "Alpha Beta")]),
+        ("Kalo   10\tNorth", [(0, 15, "Kalo 10 North")]),
+        # longest first among aliases that share a first token
+        ("Kalo 10 North met Kalo 10 and Kalo 1", [
+            (0, 13, "Kalo 10 North"), (18, 25, "Kalo 10"), (30, 34, "Kalo"),
+        ]),
+        # adjacent hits
+        ("Alpha Beta Gamma Gamma", [
+            (0, 10, "Alpha Beta"), (11, 16, "Gamma"), (17, 22, "Gamma"),
+        ]),
+        # a token with trailing punctuation is a different token
+        ("Kalo. met Kalo .", [(10, 14, "Kalo")]),
+        # the longest alias fails on "Beta.", the shorter one matches
+        ("Alpha Beta.", [(0, 5, "Alpha")]),
+        # empty and blank text
+        ("", []),
+        (" \t\n ", []),
+    ],
+)
+def test_token_matcher_edge_cases(text, expected):
+    aliases = ("Alpha Beta", "Alpha", "Gamma", "Kalo", "Kalo 10", "Kalo 10 North")
+    assert TokenDictMatcher(aliases).find(text) == expected
+    assert _brute_force_find(aliases, text) == expected
+
+
+def test_token_matcher_matches_brute_force_on_pages():
+    rows, world = generate_page_rows(n_pages=60, n_entities=40, seed=9)
+    aliases = tuple({a for names in world.aliases.values() for a in names})
+    m = TokenDictMatcher(aliases)
+    hits = 0
+    for _, _, html, text, _ in rows:
+        text = text if text is not None else extract_text_bytes(html)
+        got = m.find(text)
+        assert got == _brute_force_find(aliases, text)
+        hits += len(got)
+    assert hits > 0
+
+
+@pytest.mark.parametrize("matcher_for", [token_matcher_for, automaton_for])
+def test_matcher_cache_follows_the_dictionary(matcher_for):
+    # A freed dictionary's address is reused by the next one of the same
+    # size (CPython's tuple free list); a cache keyed on id() alone would
+    # then return the matcher of the freed dictionary.
+    find = (lambda m, t: m.find(t)) if matcher_for is token_matcher_for else (
+        lambda m, t: find_mentions(t, m)
+    )
+    first = tuple(["Alpha Beta"])
+    assert find(matcher_for(first), "Alpha Beta") == [(0, 10, "Alpha Beta")]
+    del first
+    second = tuple(["Gamma"])
+    assert find(matcher_for(second), "Gamma met Alpha Beta") == [(0, 5, "Gamma")]
+    # the same dictionary object keeps its cached matcher
+    assert matcher_for(second) is matcher_for(second)
 
 
 def test_extract_text_byte_identical():
@@ -80,6 +176,37 @@ def test_mentions_and_linking(spark):
     ents = {r["entity"] for r in linked.select("entity").distinct().collect()}
     valid = set(world.aliases.keys())
     assert ents <= valid
+
+
+def test_fused_pass_matches_stage_functions(spark):
+    # html-only, text-only, empty-text and all-null pages in one frame
+    rows, world = generate_page_rows(n_pages=40, n_entities=30, seed=19)
+    assert any(r[3] is None for r in rows) and any(r[2] is None for r in rows)
+    ts = rows[0][1]
+    rows += [
+        ("u-empty", ts, None, "", "en"),
+        ("u-empty-html", ts, html_of_text("", "t"), "", "en"),
+        ("u-null", ts, None, None, "en"),
+        (None, None, None, None, None),
+    ]
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in PAGES_SCHEMA])
+    pages = spark.createDataFrame(rows, schema).repartition(3)
+    ad = alias_dictionary_df(spark, world)
+
+    found = stages.find_mentions_and_triples(pages, ad)
+    assert found.schema == stages.FOUND_SCHEMA
+    text = extract_text(pages)
+    got_m = Counter(map(tuple, stages.mentions_of(found).collect()))
+    want_m = Counter(map(tuple, detect_mentions(text, ad).collect()))
+    got_t = Counter(map(tuple, stages.triples_of(found).collect()))
+    want_t = Counter(map(tuple, stages.raw_triples(text).collect()))
+    assert got_m == want_m and sum(got_m.values()) > 0
+    assert got_t == want_t and sum(got_t.values()) > 0
+    # the split frames carry the stage schemas
+    assert stages.mentions_of(found).schema == stages.MENTIONS_SCHEMA
+    assert stages.triples_of(found).schema == stages.TRIPLE_SCHEMA
+    # every row is one of the two kinds
+    assert found.count() == sum(got_m.values()) + sum(got_t.values())
 
 
 def test_canonicalize_rewrites_dups(spark):
@@ -222,6 +349,30 @@ def test_large_dictionary_takes_shuffle_path(spark):
     t_dist = extract_triples(text_df, ad, broadcast_threshold=0)
     tkey = lambda r: (r["url"], r["node1"], r["label"], r["node2"])  # noqa: E731
     assert sorted(map(tkey, t_bcast.collect())) == sorted(map(tkey, t_dist.collect()))
+
+
+def test_large_dictionary_fallback_in_memory(spark, monkeypatch):
+    # An alias count above the broadcast threshold sends the in-memory run
+    # down the distributed mention join; its edges and ids must equal the
+    # broadcast run's.
+    pages, world = generate_pages_df(spark, n_pages=40, n_entities=25, seed=23)
+    ad = alias_dictionary_df(spark, world)
+    key = lambda r: (r["node1"], r["label"], r["node2"], r["id"])  # noqa: E731
+    bcast = set(map(key, run_pipeline_fused(spark, pages, ad, n_buckets=2).collect()))
+
+    calls = []
+    distributed = stages.detect_mentions_distributed
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return distributed(*args, **kwargs)
+
+    monkeypatch.setattr(stages, "detect_mentions_distributed", spy)
+    big = run_pipeline_fused(
+        spark, pages, ad, n_buckets=2, alias_count=stages.ALIAS_BROADCAST_THRESHOLD + 1
+    )
+    assert set(map(key, big.collect())) == bcast and bcast
+    assert len(calls) == 1
 
 
 def test_pipeline_catalog_table_sink_and_resume(spark, tmp_path):
